@@ -25,7 +25,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from distributed_vector_database_spark.functions.vector import dot
+from distributed_vector_database_spark.functions.vector import (
+    dot,
+    vector_literal,
+)
 from distributed_vector_database_spark.operators.topk import topk
 
 __all__ = [
@@ -57,16 +60,12 @@ def lsh_bucket(
 ) -> Column:
     """Bucket id = concatenated sign bits of dot(v, plane_j), e.g. '10110010'.
 
-    JVM-side only: the plane matrix enters the plan as a literal
-    array<array<double>>; no shuffle, no Python.
+    JVM-side only: each plane enters the plan as one ``vector_literal``
+    array<double>; no shuffle, no Python.
     """
-    plane_exprs = [
-        F.array(*[F.lit(float(x)) for x in p]).cast("array<double>")
-        for p in planes
-    ]
     bits = [
         F.when(dot(vector_col, p) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in plane_exprs
+        for p in planes
     ]
     return F.concat(*bits)
 
@@ -179,9 +178,7 @@ def binary_asym_topk(
     256-entry per-byte partial-sum LUT — the scan cost stays 1 bit/dim;
     here the signs come straight off the float column, like binary_topk.
     """
-    qv = F.array(*[F.lit(float(x)) for x in query_vector]).cast(
-        "array<double>"
-    )
+    qv = vector_literal(query_vector)
     folded = F.aggregate(
         F.zip_with(
             qv,
@@ -227,13 +224,10 @@ def binary_rerank_topk(
     short = binary_topk(
         df, query_vector, shortlist, vector_col=vector_col, id_col=id_col
     )
-    qv = F.array(*[F.lit(float(x)) for x in query_vector]).cast(
-        "array<double>"
-    )
     cand = df.join(
         F.broadcast(short.select(id_col)), on=id_col, how="left_semi"
     )
-    score = round_score(score_column(metric, F.col(vector_col), qv), 6)
+    score = round_score(score_column(metric, F.col(vector_col), query_vector), 6)
     scored = cand.select(F.col(id_col), score.alias("score"))
     w = Window.orderBy(*_order(metric, F.col("score"), F.col(id_col)))
     return (
@@ -288,13 +282,12 @@ def matryoshka_rerank_topk(
         id_col=id_col,
         metric="cosine",
     )
-    qv = F.array(*[F.lit(float(x)) for x in query_vector]).cast(
-        "array<double>"
-    )
     cand = df.join(
         F.broadcast(short.select(id_col)), on=id_col, how="left_semi"
     )
-    score = round_score(score_column("cosine", F.col(vector_col), qv), 6)
+    score = round_score(
+        score_column("cosine", F.col(vector_col), query_vector), 6
+    )
     scored = cand.select(F.col(id_col), score.alias("score"))
     w = Window.orderBy(*_order("cosine", F.col("score"), F.col(id_col)))
     return (
@@ -523,7 +516,9 @@ def _grouped_map_sorted(keyed, key_col, group_fn, schema, out_cols):
     (the kernel is untouched; only the dispatch changes), one Arrow
     exchange either way. Groups can span Arrow batch boundaries within
     a partition; the trailing (possibly incomplete) key group of every
-    batch is carried into the next."""
+    batch is carried into the next. Each group reaches ``group_fn`` with
+    a fresh 0..n-1 index, as ``applyInPandas`` hands it over, so a kernel
+    may use ``.loc[0]``."""
     rep = keyed.repartition(F.col(key_col)).sortWithinPartitions(key_col)
 
     def _stream(batches):
@@ -549,13 +544,15 @@ def _grouped_map_sorted(keyed, key_col, group_fn, schema, out_cols):
             bounds = np.r_[starts, len(body)]
             outs = []
             for i in range(len(starts)):
-                res = group_fn(body.iloc[bounds[i] : bounds[i + 1]])
+                res = group_fn(
+                    body.iloc[bounds[i] : bounds[i + 1]].reset_index(drop=True)
+                )
                 if len(res):
                     outs.append(res)
             if outs:
                 yield pd.concat(outs, ignore_index=True)
         if carry is not None and len(carry):
-            res = group_fn(carry)
+            res = group_fn(carry.reset_index(drop=True))
             if len(res):
                 yield res
 

@@ -136,10 +136,9 @@ def late_interaction_topk(
 
     score_cols = []
     for i, q in enumerate(query_vectors):
-        qv = F.array(*[F.lit(float(x)) for x in q]).cast("array<double>")
         score_cols.append(
             round_score(
-                score_column("cosine", F.col(vector_col), qv), 6
+                score_column("cosine", F.col(vector_col), q), 6
             ).alias(f"_s{i}")
         )
     scored = units.select(F.col(doc_col), *score_cols)

@@ -39,6 +39,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from distributed_vector_database_spark.functions.vector import vector_literal
+
 __all__ = [
     "fit_pq_codebooks",
     "pq_encode",
@@ -158,15 +160,6 @@ def fit_pq_codebooks(
     return books
 
 
-def _book_lit(book: Sequence[Sequence[float]]) -> Column:
-    return F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in code]).cast("array<double>")
-            for code in book
-        ]
-    )
-
-
 def _sq_dist(a: Column, b: Column) -> Column:
     """Sequential left-to-right sum of squared differences (float64) —
     accumulation order mirrored exactly by the DuckDB oracle's
@@ -198,7 +191,7 @@ def pq_encode(
     codes = []
     for j in range(m):
         s = F.slice(v, j * sub + 1, sub)
-        dists = F.transform(_book_lit(codebooks[j]), _dist_to(s))
+        dists = F.transform(vector_literal(codebooks[j]), _dist_to(s))
         codes.append(
             (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
         )
@@ -263,7 +256,7 @@ def pq_decode(codes_col: str | Column, codebooks: Codebooks) -> Column:
     """Reconstruct an ``array<double>`` by concatenating each subspace's
     codeword — the lossy inverse of :func:`pq_encode`."""
     _check(codebooks)
-    cb = F.array(*[_book_lit(book) for book in codebooks])
+    cb = vector_literal(codebooks)
     return F.flatten(
         F.zip_with(
             _c(codes_col),
@@ -298,12 +291,7 @@ def pq_adc_lut(
 def pq_adc_score(codes_col: str | Column, lut: Sequence[Sequence[float]]) -> Column:
     """Approximate squared L2 distance from the codes alone: m table
     lookups + a sum. O(m) per row, JVM-side, no vector column needed."""
-    lut_lit = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in row]).cast("array<double>")
-            for row in lut
-        ]
-    )
+    lut_lit = vector_literal(lut)
     return F.aggregate(
         F.zip_with(
             _c(codes_col),
@@ -449,12 +437,7 @@ def residual_col(
     Pure Catalyst: centroid matrix as a plan literal, one ``element_at`` by
     shard id, one ``zip_with`` subtract — narrow projection, no shuffle.
     """
-    cents = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in c]).cast("array<double>")
-            for c in centroids
-        ]
-    )
+    cents = vector_literal(centroids)
     cent = F.element_at(cents, _c(shard_col).cast("int") + 1)
     return F.zip_with(
         _c(vector_col).cast("array<double>"), cent, lambda x, c: x - c
@@ -488,19 +471,7 @@ def pq_adc_score_by_shard(
     """ADC distance where each row's LUT is selected by its shard id —
     the scoring half of residual IVF-PQ. Still O(m) lookups + sum per
     row, JVM-side; the 3-level LUT tensor is a plan literal."""
-    luts_lit = F.array(
-        *[
-            F.array(
-                *[
-                    F.array(*[F.lit(float(x)) for x in row]).cast(
-                        "array<double>"
-                    )
-                    for row in lut
-                ]
-            )
-            for lut in luts
-        ]
-    )
+    luts_lit = vector_literal(luts)
     lut_for_row = F.element_at(luts_lit, _c(shard_col).cast("int") + 1)
     return F.aggregate(
         F.zip_with(
@@ -726,12 +697,7 @@ def rotate_col(
     a plan literal; each output element is a sequential zip_with dot
     product. Narrow projection — no shuffle; pairs with :func:`pq_encode`
     for OPQ (rotate → PQ in the rotated basis)."""
-    R_lit = F.array(
-        *[
-            F.array(*[F.lit(float(x)) for x in row]).cast("array<double>")
-            for row in rotation
-        ]
-    )
+    R_lit = vector_literal(rotation)
     v = _c(vector_col).cast("array<double>")
     return F.transform(
         R_lit,

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from distributed_vector_database_spark.functions.vector import (
     cosine_similarity,
     round_score,
+    vector_literal,
 )
 
 __all__ = [
@@ -128,14 +129,11 @@ def _fit_sq_bounds_arrow(
 
 
 def _bounds_arrays(bounds: Sequence[tuple[float, float]]):
-    mins = F.array(*[F.lit(float(lo)) for lo, _ in bounds])
+    mins = vector_literal([lo for lo, _ in bounds])
     # constant dimension (hi == lo) -> scale 1.0 so codes are 0 and
     # dequant returns lo exactly
-    scales = F.array(
-        *[
-            F.lit((float(hi) - float(lo)) / 255.0 if hi > lo else 1.0)
-            for lo, hi in bounds
-        ]
+    scales = vector_literal(
+        [(float(hi) - float(lo)) / 255.0 if hi > lo else 1.0 for lo, hi in bounds]
     )
     return mins, scales
 
@@ -191,8 +189,7 @@ def sq_adc_cosine(
 ) -> F.Column:
     """Approximate cosine against the dequantized vector — one inline
     expression, no materialized reconstruction column."""
-    q = F.array(*[F.lit(float(x)) for x in query_vector])
-    return cosine_similarity(sq_dequantize_col(codes_col, bounds), q)
+    return cosine_similarity(sq_dequantize_col(codes_col, bounds), query_vector)
 
 
 def sq_topk(
@@ -246,10 +243,11 @@ def sq_rerank_topk(
         .orderBy(F.desc("_approx"), F.asc(id_col))
         .limit(shortlist)
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vector])
     rescored = stage1.select(
         F.col(id_col),
-        round_score(cosine_similarity(F.col(vector_col), q)).alias("score"),
+        round_score(cosine_similarity(F.col(vector_col), query_vector)).alias(
+            "score"
+        ),
     )
     w = Window.orderBy(F.desc("score"), F.asc(id_col))
     return (

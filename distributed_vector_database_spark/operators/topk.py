@@ -49,7 +49,9 @@ def score_column(metric: str, vec_col, query_col):
     """Similarity/distance score between two array columns.
 
     ``cosine`` and ``dot`` are similarities (higher = better);
-    ``euclidean`` is a distance (lower = better).
+    ``euclidean`` is a distance (lower = better). ``query_col`` may be a
+    constant query vector (a sequence of floats): it then enters the plan
+    as one ``vector_literal`` and cosine takes its norm on the driver.
     """
     if metric == "cosine":
         return cosine_similarity(vec_col, query_col)
@@ -80,14 +82,21 @@ def topk(
 
     Returns (id_col, score) ordered by (score best-first, id ASC).
 
-    ``method='auto'`` (default): pick by dimensionality. Round-2
-    remeasure (10k rows × 768-d, 3×3 trials): expr 0.67-0.89 s vs arrow
-    1.01-1.05 s — whole-stage codegen now carries the dot product past
-    the Arrow round-trip at every tested dim, so auto stays on the
-    expression path through 1024 dims and reserves the Arrow kernel for
-    ultra-high dims, where the m·k expression tree itself becomes the
-    bottleneck. (Batched multi-query search always uses the Arrow
-    kernel — ``batch_topk`` — where one GEMM serves all queries.)
+    ``method='auto'`` (default): pick by dimensionality — the expression
+    path through 1024 dims, the Arrow kernel above, where the m·k
+    expression tree itself becomes the bottleneck. Round-15 remeasure
+    (10k rows in one parquet file, local[4] on 4 cores, 3 queries × 3
+    trials, median and range): 384-d expr 0.88 s (0.68-0.96) vs arrow
+    0.77 s (0.74-0.94); 768-d expr 1.43 s (1.35-1.90) vs arrow 0.86 s
+    (0.74-1.06). Before the query became one folded literal with a
+    driver-side norm (``vector_literal``), expr took 1.61 s and 3.12 s.
+    A single-query ``mapInPandas`` kernel was measured as the default
+    and rejected: 2.2-2.8x faster on the IVF serving benchmark (~3k
+    probed rows at 384-d) but 15-25% slower on the <=50-row exact
+    re-rank of ``IVFPQIndex.search``, where the Python-worker round trip
+    dominates; choosing by candidate count would need a second scoring
+    path. (Batched multi-query search always uses the Arrow kernel —
+    ``batch_topk`` — where one GEMM serves all queries.)
     ``method='expr'``: column-pruned scan -> Catalyst expression score ->
     TakeOrderedAndProject (per-partition heap + driver merge). Zero Python;
     right up to ~10^2 dims where expression evaluation of the dot product
@@ -118,8 +127,7 @@ def topk(
         )
     if method != "expr":
         raise ValueError(f"method must be 'expr' or 'arrow', got {method!r}")
-    q = F.array(*[F.lit(float(x)) for x in query_vector]).cast("array<double>")
-    score = score_column(metric, F.col(vector_col), q)
+    score = score_column(metric, F.col(vector_col), query_vector)
     if score_digits is not None:
         score = round_score(score, score_digits)
     scored = df.select(F.col(id_col), score.alias("score"))
@@ -146,8 +154,7 @@ def radius_search(
     scan + filter, embarrassingly parallel at any scale, and composes with
     IVF probing the same way ``topk`` does (filter shard_id first).
     """
-    q = F.array(*[F.lit(float(x)) for x in query_vector]).cast("array<double>")
-    score = score_column(metric, F.col(vector_col), q)
+    score = score_column(metric, F.col(vector_col), query_vector)
     if score_digits is not None:
         score = round_score(score, score_digits)
     scored = df.select(F.col(id_col), score.alias("score"))

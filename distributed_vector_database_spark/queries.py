@@ -18,6 +18,7 @@ Cross-engine determinism rules (SURVEY.md §5):
 from __future__ import annotations
 
 import os
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -170,18 +171,20 @@ def _local_parquet(sf_dir: str, table: str) -> str | None:
     return p if os.path.isfile(p) else None
 
 
-_MASTER_LOCAL_MEMO: dict[int, bool] = {}
+_MASTER_LOCAL_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _master_is_local(sess: SparkSession) -> bool:
     """Memoized `spark.master startswith local` (the conf lookup is a
-    py4j round-trip; `_local_parquet` runs on every query setup)."""
-    key = id(sess)
-    hit = _MASTER_LOCAL_MEMO.get(key)
+    py4j round-trip; `_local_parquet` runs on every query setup).
+
+    Keyed on the session object itself, held weakly: an ``id()`` key
+    could be reused by a later session after the first one is freed and
+    return the old session's answer; a dead session's entry drops out."""
+    hit = _MASTER_LOCAL_MEMO.get(sess)
     if hit is None:
         hit = sess.conf.get("spark.master", "local").startswith("local")
-        _MASTER_LOCAL_MEMO.clear()  # one live session at a time; no leak
-        _MASTER_LOCAL_MEMO[key] = hit
+        _MASTER_LOCAL_MEMO[sess] = hit
     return hit
 
 
@@ -7962,6 +7965,10 @@ def _sq_bounds(spark, sf_dir):
                 # a null embedding would silently vanish in flatten();
                 # the Spark aggregate owns that case
                 raise ValueError("null embeddings")
+            if np.unique(np.diff(np.asarray(col.offsets))).size != 1:
+                # ragged rows (e.g. lengths 3 and 5 over 2 rows) can still
+                # reshape evenly into a wrong matrix; Spark owns them
+                raise ValueError("ragged embeddings")
             mat = np.asarray(col.flatten(), dtype=np.float64).reshape(
                 t.num_rows, -1
             )

@@ -563,3 +563,45 @@ def test_exact_quadratic_kernels_refuse_oversized_corpora(spark):
         embedding_neardup_pairs(emb, threshold=0.99, max_rows=None).count()
         >= 0
     )
+
+
+def test_grouped_map_sorted_hands_groups_a_fresh_index(spark):
+    """ADVICE r14: the sorted-partition dispatcher sliced groups out of a
+    batch and passed them with their batch index, so a kernel using
+    ``.loc[0]`` failed or read the wrong row; applyInPandas hands every
+    group a 0..n-1 index. Both dispatches must give the same answer, also
+    for groups carried across Arrow batch boundaries."""
+    import pandas as pd
+
+    from distributed_vector_database_spark.operators.ann import (
+        _grouped_map_sorted,
+    )
+
+    keyed = spark.createDataFrame(
+        [(i % 23, float(i)) for i in range(120)], "_key int, v double"
+    )
+    schema = "_key int, first_key int, total double, n long"
+
+    def kernel(g):
+        return pd.DataFrame(
+            {
+                "_key": [int(g.loc[0, "_key"])],
+                "first_key": [int(g.loc[0, "_key"])],
+                "total": [float(g["v"].sum())],
+                "n": [len(g)],
+            }
+        )
+
+    cols = ["_key", "first_key", "total", "n"]
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    try:
+        got = sorted(
+            map(tuple, _grouped_map_sorted(keyed, "_key", kernel, schema, cols).collect())
+        )
+        exp = sorted(
+            map(tuple, keyed.groupBy("_key").applyInPandas(kernel, schema).collect())
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    assert got == exp and len(got) == 23

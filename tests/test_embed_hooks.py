@@ -281,3 +281,43 @@ def test_local_parquet_declines_remote_and_missing():
 
     assert _local_parquet("hdfs://nn/warehouse/sf1", "embeddings") is None
     assert _local_parquet("/nonexistent/dir", "embeddings") is None
+
+
+def test_master_is_local_memo_is_per_session_not_per_id():
+    """ADVICE r14: the memo was keyed on id(session); a new session at a
+    freed session's address got the old answer. Two distinct session-like
+    objects that share an id must each get their own master."""
+    import gc
+
+    from distributed_vector_database_spark.queries import _master_is_local
+
+    class Conf:
+        def __init__(self, master):
+            self.master = master
+
+        def get(self, key, default=None):
+            assert key == "spark.master"
+            return self.master
+
+    # the masters live on the classes, so an instance is one allocation
+    # and CPython's allocator hands a freed instance's slot to the next
+    class LocalSess:
+        conf = Conf("local[4]")
+
+    class RemoteSess:
+        conf = Conf("spark://cluster:7077")
+
+    local = LocalSess()
+    assert _master_is_local(local) is True
+    freed = id(local)
+    del local
+    gc.collect()
+    remote, keep = None, []
+    for _ in range(1000):
+        cand = RemoteSess()
+        if id(cand) == freed:
+            remote = cand
+            break
+        keep.append(cand)
+    assert remote is not None, "no session-like object reused the freed id"
+    assert _master_is_local(remote) is False

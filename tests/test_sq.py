@@ -134,3 +134,30 @@ def test_sq_bounds_local_fast_path_matches_spark(spark):
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     assert _sq_bounds(spark, sf_dir) == fit_sq_bounds(emb)
+
+
+def test_sq_bounds_local_fast_path_falls_back_on_ragged_rows(spark, tmp_path):
+    """ADVICE r14: ragged rows of lengths 3 and 5 hold 8 values, which
+    reshape evenly into a wrong 2 x 4 matrix. The fast path must see the
+    uneven list offsets and hand the file to the Spark aggregate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_vector_database_spark.operators.sq import fit_sq_bounds
+    from distributed_vector_database_spark.queries import _sq_bounds
+
+    table = pa.table(
+        {
+            "vec_id": pa.array([0, 1], pa.int64()),
+            "embedding": pa.array(
+                [[1.0, -2.0, 3.0], [4.0, 5.0, -6.0, 7.0, 8.0]],
+                pa.list_(pa.float32()),
+            ),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "embeddings.parquet"))
+    spark_bounds = fit_sq_bounds(
+        spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+    )
+    assert spark_bounds == [(1.0, 4.0), (-2.0, 5.0), (-6.0, 3.0)]
+    assert _sq_bounds(spark, str(tmp_path)) == spark_bounds

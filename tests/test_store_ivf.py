@@ -411,3 +411,88 @@ def test_file_uri_index_root_loads_and_invalidates_curve(
     idx.write(embeddings.filter(F.col("vec_id") % 2 == 0))
     assert idx.recall_curve is None
     assert IVFIndex.load(spark, path).recall_curve is None
+
+
+def _group_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "test")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_loaded_index_search_runs_one_job(spark, embeddings, tmp_path):
+    """A loaded index pins its layout schema on the first read, so each
+    later search is exactly one Spark job: the pruned scan + top-k. No
+    parquet footer-inference job rides along."""
+    path = str(tmp_path / "one_job_ivf")
+    cents = fit_centroids(embeddings, num_shards=4, sample_fraction=0.5, seed=42)
+    IVFIndex(spark, cents, path=path).write(embeddings)
+    idx = IVFIndex.load(spark, path)
+    assert idx.df.schema == spark.read.parquet(path).schema
+    qs = [
+        [float(x) for x in r["embedding"]]
+        for r in embeddings.filter(F.col("vec_id") < 3).orderBy("vec_id").collect()
+    ]
+    for i, q in enumerate(qs):
+        rows, jobs = _group_jobs(
+            spark,
+            f"ivf-one-job-{i}",
+            lambda: idx.search(q, k=5, nprobe=2).collect(),
+        )
+        assert len(rows) == 5 and rows[0]["score"] == 1.0
+        assert jobs == 1, f"search {i} ran {jobs} jobs"
+    # write() pins the schema of the frame it writes: same as inferred
+    writer = IVFIndex(spark, cents, path=str(tmp_path / "pinned_ivf"))
+    writer.write(embeddings)
+    assert writer.df.schema == spark.read.parquet(writer.path).schema
+
+
+def test_rows_appended_after_load_are_found_and_compact_keeps_results(
+    spark, embeddings, tmp_path
+):
+    """The pinned schema never hides data: the layout is re-listed on each
+    search, so rows appended after load() — by streaming ingest or by
+    write(mode="append") — are found by the next search of the same
+    loaded instance, and compact() leaves every result identical."""
+    from distributed_vector_database_spark.streaming.ingest import stream_ingest
+
+    path = str(tmp_path / "append_ivf")
+    cents = fit_centroids(embeddings, num_shards=4, sample_fraction=0.5, seed=42)
+    IVFIndex(spark, cents, path=path).write(embeddings.filter(F.col("vec_id") % 3 == 0))
+    idx = IVFIndex.load(spark, path)
+
+    def vec(i):
+        return [
+            float(x)
+            for x in embeddings.filter(F.col("vec_id") == i).head()["embedding"]
+        ]
+
+    def top(i):
+        return [tuple(r) for r in idx.search(vec(i), k=5, nprobe=4).collect()]
+
+    assert top(3)[0] == (3, 1.0)  # schema now pinned
+    assert top(4)[0][0] != 4
+
+    src = str(tmp_path / "append_src")
+    embeddings.filter(F.col("vec_id") % 3 == 1).repartition(2).write.parquet(src)
+    stream = spark.readStream.schema(embeddings.schema).parquet(src)
+    q = stream_ingest(idx, stream, str(tmp_path / "append_ckpt"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert top(4)[0] == (4, 1.0)
+
+    idx.write(embeddings.filter(F.col("vec_id") % 3 == 2), mode="append")
+    assert top(5)[0] == (5, 1.0)
+    assert idx.df.count() == embeddings.count()
+
+    before = {i: top(i) for i in range(9)}
+    idx.compact()
+    assert {i: top(i) for i in range(9)} == before
+    reopened = IVFIndex.load(spark, path)
+    assert [tuple(r) for r in reopened.search(vec(7), k=5, nprobe=4).collect()] == before[7]

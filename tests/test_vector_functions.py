@@ -194,3 +194,68 @@ def test_exact_6dp_rounding_on_boundaries(spark):
     ).fetchall()
     assert [d[0] for d in duck] == [r["mean6"] for r in got]
     assert [d[1] for d in duck] == [r["ratio6"] for r in got]
+
+
+def test_vector_literal_round_trips_bit_exact_and_folds(spark):
+    """vector_literal carries every double bit-exactly (signed zero, NaN,
+    infinities, the smallest subnormal, the largest finite) and Catalyst
+    folds it to a plain literal: no from_json is left in the optimized
+    plan."""
+    import struct
+
+    from distributed_vector_database_spark.functions.vector import (
+        vector_literal,
+    )
+
+    flat = [-0.0, float("nan"), float("inf"), float("-inf"), 5e-324,
+            1.7976931348623157e308, 0.1, 1.0 / 3.0]
+    matrix = [[1.5, -0.0], [5e-324, -2.0], [float("nan"), 7.0]]
+    df = spark.range(1).select(
+        vector_literal(flat).alias("v"),
+        vector_literal([]).alias("e"),
+        vector_literal(matrix).alias("m"),
+    )
+    assert dict(df.dtypes) == {
+        "v": "array<double>", "e": "array<double>",
+        "m": "array<array<double>>",
+    }
+    row = df.head()
+
+    def bits(xs):
+        return [struct.pack(">d", x) for x in xs]
+
+    assert bits(row["v"]) == bits(flat)
+    assert row["e"] == []
+    assert [bits(r) for r in row["m"]] == [bits(r) for r in matrix]
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in optimized
+    assert "1.7976931348623157E308" in optimized
+
+
+def test_cosine_against_constant_query_folds_query_norm(spark):
+    """A constant query's norm is a driver-side float: the optimized
+    single-query cosine plan holds the query literal only inside the
+    row-query dot product, never in an aggregate over the query alone,
+    and its scores are bit-identical to the column-vs-column cosine,
+    including the zero-norm guard on both sides."""
+    q = [0.5, -1.0, 2.0]
+    rows = [
+        (0, [0.5, -1.0, 2.0]),
+        (1, [1.0, 2.0, 3.0]),
+        (2, [0.0, 0.0, 0.0]),
+        (3, [-7.5, 0.125, 1e10]),
+    ]
+    df = spark.createDataFrame(rows, "id int, v array<float>").withColumn(
+        "qcol", F.array(*[F.lit(x) for x in q]).cast("array<double>")
+    )
+    const = df.select("id", cosine_similarity("v", q).alias("c"))
+    optimized = const._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("[0.5,-1.0,2.0]") == 1
+    assert "zip_with([0.5,-1.0,2.0]" not in optimized
+    assert "aggregate([0.5,-1.0,2.0]" not in optimized
+    column = df.select("id", cosine_similarity("v", "qcol").alias("c"))
+    got = [r["c"] for r in const.orderBy("id").collect()]
+    assert got == [r["c"] for r in column.orderBy("id").collect()]
+    assert got[2] == 0.0
+    zero_q = df.select(cosine_similarity("v", [0.0] * 3).alias("c"))
+    assert [r["c"] for r in zero_q.collect()] == [0.0] * 4
